@@ -116,7 +116,7 @@ object StreamingIngestBench {
       val streamWall = (System.nanoTime() - t0) / 1e9
       q.stop()
       val snap = new graft.checkpoint.SnapshotStore(store).readCurrent()
-      val corpusPaths = snap.get._2("corpus").split(";").filter(_.nonEmpty).toIndexedSeq
+      val corpusPaths = graft.checkpoint.SnapshotStore.list(snap.get._2, "corpus")
       val stored = spark.read.parquet(corpusPaths: _*).count()
       // ---- batch leg: the closest batch equivalent over the same corpus
       val tb = System.nanoTime()

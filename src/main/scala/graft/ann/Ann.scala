@@ -282,11 +282,8 @@ object Ann {
     centroids.zipWithIndex.toSeq.map { case (c, l) => (l, c.toSeq) }.toDF("l", "cvec")
       .coalesce(1) // model-sized by construction — one file, not 32 shards
       .write.mode("overwrite").parquet(path)
-    // carry the prior snapshot's other tables forward: the model commits
-    // ATOMICALLY beside them, same multi-table snapshot semantics as the
-    // crawl round commit
-    val prior = store.readCurrent().map(_._2).getOrElse(Map.empty)
-    store.commit(v, prior + (table -> path))
+    // the model commits ATOMICALLY beside the snapshot's other tables
+    store.update(v, Map(table -> Seq(path)))
     v
   }
 

@@ -3,6 +3,9 @@ package graft.checkpoint
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.types.StructType
+
 /** Iceberg-style snapshot/manifest checkpointing (SURVEY.md §4 exactly-once
   * row, §7.1).
   *
@@ -25,6 +28,11 @@ import scala.jdk.CollectionConverters._
   * catalog's table-pointer swap; data/<table>/v<N> ≈ a snapshot's manifest
   * list. On a real cluster this directory lives on an object store /
   * HDFS where rename-commit is provided by the catalog instead.
+  *
+  * A manifest value is a LIST: an append-only table's delta chain, a
+  * snapshot table's single path, or a set of committed ids (stream batch
+  * ids, ingested file names). This class owns that list encoding — callers
+  * read with [[SnapshotStore.list]] and write with [[update]].
   */
 final class SnapshotStore(rootDir: String) {
 
@@ -49,6 +57,16 @@ final class SnapshotStore(rootDir: String) {
     Files.move(curTmp, manifests.resolve("CURRENT"),
       StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
   }
+
+  /** Commit `version` with each of `tables` (a list, see the class doc)
+    * replacing its key and every other table of the current snapshot
+    * carried forward: committers share one store (a crawl beside a
+    * persisted IVF model, `Ann.saveCentroids`), and a commit that rebuilt
+    * the manifest from its own tables alone would drop the others.
+    */
+  def update(version: Int, tables: Map[String, Seq[String]]): Unit =
+    commit(version, readCurrent().map(_._2).getOrElse(Map.empty) ++
+      tables.map { case (k, xs) => k -> SnapshotStore.joinList(k, xs) })
 
   /** Latest durably-committed version, if any. */
   def currentVersion(): Option[Int] = {
@@ -116,4 +134,33 @@ final class SnapshotStore(rootDir: String) {
       }
       b.toString
     }
+}
+
+object SnapshotStore {
+
+  private val Sep = ";"
+
+  /** The elements of list `key` in `manifest`; empty when the key is absent. */
+  def list(manifest: Map[String, String], key: String): Seq[String] =
+    manifest.get(key).map(_.split(Sep).toIndexedSeq.filter(_.nonEmpty)).getOrElse(Nil)
+
+  /** `;`-joined, the encoding every committed manifest already holds. An
+    * element containing the separator would come back split — a file
+    * name `a;b.csv` never recognised as ingested, a path read as two — so
+    * it is rejected rather than written.
+    */
+  private def joinList(key: String, xs: Seq[String]): String = {
+    xs.find(_.contains(Sep)).foreach { x =>
+      throw new IllegalArgumentException(
+        s"manifest list '$key' cannot hold an element containing '$Sep': $x")
+    }
+    xs.mkString(Sep)
+  }
+
+  /** The parquet tables at `paths` as one frame, or an empty frame of
+    * schema `ddl` when there are none (a table nothing has committed yet).
+    */
+  def read(spark: SparkSession, paths: Seq[String], ddl: String): DataFrame =
+    if (paths.nonEmpty) spark.read.parquet(paths: _*)
+    else spark.createDataFrame(spark.sparkContext.emptyRDD[Row], StructType.fromDDL(ddl))
 }

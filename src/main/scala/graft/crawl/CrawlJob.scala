@@ -1,6 +1,6 @@
 package graft.crawl
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.checkpoint.SnapshotStore
@@ -25,10 +25,12 @@ object CrawlJob {
   /** xxhash64 over the canonical URL — the dedup key (north_rule). */
   private def canonicalCol = graft.expr.Native.canonicalize _
 
-  /** Host column — see [[graft.urls.UrlCols.hostCol]] (shared with the
-    * robots rule table so frontier hosts and rule hosts derive identically).
+  /** Schemas of the crawl's append-only tables, for reading a table no
+    * round has committed yet.
     */
-  def hostCol(url: Column): Column = graft.urls.UrlCols.hostCol(url)
+  val RatesDdl = "card_code STRING, trans_code STRING, date DATE, provider_id INT, rate DOUBLE"
+  val SeenDdl = "urlHash BIGINT, url STRING, round INT"
+  private val MetricsDdl = "round INT, host STRING, scheduled BIGINT, dedupDropped BIGINT, offsiteDropped BIGINT, robotsDropped BIGINT, fetchMissed BIGINT, errorDropped BIGINT, extractedOk BIGINT"
 
   /** Expand seed combos (card_c, trans_c, date, seq) into frontier rows for
     * one provider, building the byte-exact provider URL (SURVEY.md §2#35-36)
@@ -46,7 +48,7 @@ object CrawlJob {
       .withColumn("url", p.urlFor(col("card_c"), col("trans_c"), col("date")))
       .withColumn("canonUrl", canonicalCol(col("url"))) // computed ONCE, carried as data
       .withColumn("urlHash", graft.urls.UrlCols.urlHashCol(col("url"), col("canonUrl"), dedupKey))
-      .withColumn("host", hostCol(col("url")))
+      .withColumn("host", graft.urls.UrlCols.hostCol(col("url")))
       .withColumn("provider", lit(provider))
       .withColumn("priority", lit(0))
       .withColumn("retries", lit(0))
@@ -100,8 +102,8 @@ object CrawlJob {
     // ---- load or init state ------------------------------------------------
     // frontier + hostStates are full snapshots (they shrink / stay tiny);
     // seen / rates / metrics are APPEND-ONLY and stored as per-round delta
-    // files — the manifest carries the ';'-joined delta path list, so each
-    // round writes O(round delta), not O(total state). At 10^10 URLs a full
+    // files — the manifest carries the delta path list, so each round
+    // writes O(round delta), not O(total state). At 10^10 URLs a full
     // seen-set rewrite per round would dominate everything.
     val resume = store.readCurrent()
     var round = resume.map(_._1).getOrElse(0)
@@ -111,24 +113,14 @@ object CrawlJob {
       case None =>
         (UrlSeen.dedupWithinBatch(frontier0), spark.emptyDataset[HostState])
     }
-    def resumePaths(key: String): Seq[String] =
-      resume.flatMap(_._2.get(key)).map(_.split(";").toIndexedSeq.filter(_.nonEmpty)).getOrElse(Nil)
-    var seenPaths: Seq[String] = resumePaths("seen")
-    var ratesPaths: Seq[String] = resumePaths("rates")
-    var metricsPaths: Seq[String] = resumePaths("metrics")
-    var lineagePaths: Seq[String] = resumePaths("lineage")
-    def emptyDf(ddl: String): DataFrame = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.StructType.fromDDL(ddl))
-    val RatesDdl = "card_code STRING, trans_code STRING, date DATE, provider_id INT, rate DOUBLE"
-    val SeenDdl = "urlHash BIGINT, url STRING, round INT"
-    val MetricsDdl = "round INT, host STRING, scheduled BIGINT, dedupDropped BIGINT, offsiteDropped BIGINT, robotsDropped BIGINT, fetchMissed BIGINT, errorDropped BIGINT, extractedOk BIGINT"
-    def seenDf: DataFrame =
-      if (seenPaths.isEmpty) emptyDf(SeenDdl) else spark.read.parquet(seenPaths: _*)
-    def ratesDf: DataFrame =
-      if (ratesPaths.isEmpty) emptyDf(RatesDdl) else spark.read.parquet(ratesPaths: _*)
-    def metricsDf: DataFrame =
-      if (metricsPaths.isEmpty) emptyDf(MetricsDdl) else spark.read.parquet(metricsPaths: _*)
+    val committed = resume.map(_._2).getOrElse(Map.empty[String, String])
+    var seenPaths: Seq[String] = SnapshotStore.list(committed, "seen")
+    var ratesPaths: Seq[String] = SnapshotStore.list(committed, "rates")
+    var metricsPaths: Seq[String] = SnapshotStore.list(committed, "metrics")
+    var lineagePaths: Seq[String] = SnapshotStore.list(committed, "lineage")
+    def seenDf: DataFrame = SnapshotStore.read(spark, seenPaths, SeenDdl)
+    def ratesDf: DataFrame = SnapshotStore.read(spark, ratesPaths, RatesDdl)
+    def metricsDf: DataFrame = SnapshotStore.read(spark, metricsPaths, MetricsDdl)
 
     // reconcile the partitioned-Bloom sidecar state with the committed
     // snapshot: the filters are merged BEFORE each manifest commit, so
@@ -150,11 +142,6 @@ object CrawlJob {
       }
       UrlSeen.writeBloomRound(bloomDir, round)
     }
-
-    // 1-based registry id (client.py:86-88 seeding order); all provider-
-    // specific behavior below routes through the registry, so a new provider
-    // never touches this loop (the reference's one extension point)
-    val providerId = graft.provider.Providers.idCol(col("provider"), providers)
 
     // ---- rounds ------------------------------------------------------------
     // no robots rules at all (common in tests/bench) ⇒ skip the gate's
@@ -209,92 +196,12 @@ object CrawlJob {
       val onsiteF =
         if (allowedDomains.isEmpty) fresh else Robots.onSite(fresh, allowedDomains).cache()
       val allowedF = if (robotsEmpty) onsiteF else Robots.allowed(onsiteF, robots).cache()
-      // 3. per-host politeness schedule
-      val sched = Scheduler.scheduleRound(allowedF, hostStates.toDF(), cfg, roundSec)
-        .cache()
-      // sched (and every cached frame upstream of it) is materialized by
-      // the single `extracted.count()` action below, BEFORE the concurrent
-      // write phase — cache blocks fill as the extraction pass scans them,
-      // so the concurrent downstream actions (which would each recompute
-      // the whole dedup→robots→schedule chain on a cold cache — AQE
-      // compiles a fresh physical plan per action; only materialized cache
-      // blocks are shared) all hit warm caches. One action per round for
-      // the whole chain, not two (r07: a separate sched.count() here paid
-      // an extra pass over the schedule plan every round).
+      // 3-7. schedule → fetch → extract → rates/seen/frontier/host deltas
+      val r = step(allowedF, hostStates, ratesDf, round, pages, cfg, roundSec, maxRetries, providers)
+      val (sched, extracted) = (r.sched, r.extracted)
 
-      // 4. "fetch": equi-join against the page table on url — the offline,
-      //    deterministic stand-in for the downloader (SURVEY.md §2#19).
-      //    Deliberately NOT cached: page bodies are KBs per row; we stream
-      //    them once through extraction and cache only the slim result.
-      //    SHUFFLE_HASH hint with the slim schedule as build side: a
-      //    sort-merge join would SORT the KB-per-row page partitions —
-      //    thread dumps showed that copyMemory-heavy sort dominating the
-      //    round. Hash-probing streams the fat side untouched.
-      val fetched = sched.hint("shuffle_hash")
-        .join(pages.select(col("url"), col("text")), Seq("url"), "left")
-
-      // 5. extract per provider in ONE pass over the page text; MC error
-      //    pages are dropped (not stored), Visa parse misses store a null
-      //    rate (reference parity). The text column is gone after this.
-      //    `headers` is OPTIONAL on frontier rows (expandSeeds emits it;
-      //    direct frontier builders like the bench workload need not) —
-      //    when present it must survive extraction so retry rows re-enter
-      //    the frontier with their request headers intact.
-      val carryCols =
-        Seq("url", "canonUrl", "urlHash", "host", "card_c", "trans_c", "date",
-          "provider", "priority", "seq", "retries") ++
-          (if (frontier.columns.contains("headers")) Seq("headers") else Nil)
-      val extracted = fetched.select(
-        carryCols.map(col) ++ Seq(
-          providerId.as("provider_id"),
-          col("text").isNotNull.as("hit"),
-          (col("text").isNotNull && coalesce(
-            graft.provider.Providers.route(col("provider"), providers)(_.isError(col("text"))),
-            lit(false))).as("is_err"),
-          graft.provider.Providers.route(col("provider"), providers)(_.extractRate(col("text")))
-            .as("rate")): _*)
-        .cache()
-      extracted.count() // one streaming pass fills the (slim) cache
-
-      val parsed = extracted
-        .filter(col("hit") && !col("is_err"))
-        .select(
-          col("card_c").as("card_code"),
-          col("trans_c").as("trans_code"),
-          col("date"),
-          col("provider_id"),
-          col("rate"))
-
-      // 6. append rates honoring the unique constraint (orm.py:33-34):
-      //    set-difference upsert (duplicate keys within the batch AND vs
-      //    prior rounds both excluded), written as this round's delta
-      val parsedUnique = parsed.dropDuplicates("card_code", "trans_code", "date", "provider_id")
-      val newRates = parsedUnique.join(
-        ratesDf.select("card_code", "trans_code", "date", "provider_id"),
-        Seq("card_code", "trans_code", "date", "provider_id"), "left_anti")
-
-      // 7. seen delta = scheduled canonical urls; frontier -= scheduled
-      //    (dedup-dropped and robots-dropped rows leave the frontier too —
-      //    frontier1 derives from allowedF). Fetch misses re-enter at
-      //    priority-1 with retries+1, capped at maxRetries (Scrapy's retry
-      //    middleware defaults, SURVEY.md §2#30).
-      // the round number travels as DATA in the seen rows (not as a path
-      // position), so per-round provenance survives delta compaction
-      val seenDelta = sched.select(col("urlHash"), col("canonUrl").as("url"), lit(round).as("round"))
-      val retryRows = extracted
-        .filter(!col("hit") && col("retries") < maxRetries)
-        .select(carryCols.map {
-          case "priority" => (col("priority") - 1).as("priority")
-          case "retries" => (col("retries") + 1).as("retries")
-          case c => col(c)
-        }: _*)
-      val frontier1 = allowedF
-        .join(sched.select("urlHash", "canonUrl"), Seq("urlHash", "canonUrl"), "left_anti")
-        .unionByName(retryRows)
-
-      // 8. host throttle state + per-round fetch/dedup metrics
-      //    (north_rule). All aggregations run over slim cached frames.
-      val hostStates1 = Scheduler.updateHostStates(sched, hostStates, cfg, round, roundSec)
+      // 8. per-round fetch/dedup metrics (north_rule). All aggregations run
+      //    over slim cached frames.
       // ALL per-host stage counts in ONE aggregation: tag each (cached,
       // slim) stage frame with its name, union, pivot on the fixed stage
       // list — one shuffle of (host, stage) rows instead of 8 groupBys +
@@ -395,10 +302,10 @@ object CrawlJob {
         "blooms"
       }
       val writes = Future.sequence(Seq(
-        persist("frontier", frontier1),
-        persist("hostStates", hostStates1.toDF()),
-        persist("seen", seenDelta),
-        persist("rates", newRates),
+        persist("frontier", r.frontier),
+        persist("hostStates", r.hostStates.toDF()),
+        persist("seen", r.seenDelta),
+        persist("rates", r.newRates),
         persist("metrics", metricsDelta),
         bloomMerge))
       val Seq(frontierPath, hostStatesPath, seenPath, ratesPath, metricsPath, _) =
@@ -472,26 +379,19 @@ object CrawlJob {
         lineagePaths = compact("lineage", lineagePaths)
       }
 
-      // carry foreign tables (e.g. a persisted IVF model,
-      // Ann.saveCentroids) forward from the previous snapshot: committers
-      // share one store, and a commit that rebuilt the manifest from
-      // scratch would silently DROP every table it doesn't own from the
-      // current snapshot
-      val priorTables = store.readCurrent().map(_._2).getOrElse(Map.empty)
-      store.commit(round, priorTables ++ Map(
-        "frontier" -> frontierPath,
-        "hostStates" -> hostStatesPath,
-        "seen" -> seenPaths.mkString(";"),
-        "rates" -> ratesPaths.mkString(";"),
-        "metrics" -> metricsPaths.mkString(";"),
-        "lineage" -> lineagePaths.mkString(";")))
+      store.update(round, Map(
+        "frontier" -> Seq(frontierPath),
+        "hostStates" -> Seq(hostStatesPath),
+        "seen" -> seenPaths,
+        "rates" -> ratesPaths,
+        "metrics" -> metricsPaths,
+        "lineage" -> lineagePaths))
 
       // reload from the committed snapshot: truncates lineage so plans don't
       // grow unboundedly across rounds (the iterative-algorithm idiom)
       frontier = spark.read.parquet(frontierPath)
       hostStates = spark.read.parquet(hostStatesPath).as[HostState]
-      sched.unpersist()
-      extracted.unpersist()
+      r.unpersist()
       allowedF.unpersist()
       onsiteF.unpersist()
       fresh.unpersist()
@@ -502,5 +402,123 @@ object CrawlJob {
         println(f"[crawl] round $round done in ${(System.nanoTime() - tRound) / 1e9}%.1f s; frontier left: $frontierCount")
     }
     (ratesDf, seenDf, metricsDf)
+  }
+
+  /** One round's tables, built by [[step]]. `sched` and `extracted` are
+    * cached and already filled; the caller releases them with
+    * [[unpersist]] once everything it derives from them is written.
+    *
+    * @param frontier the next frontier: politeness-deferred rows ∪ fetch-miss
+    *                 retries
+    */
+  final case class Round(
+      sched: DataFrame,
+      extracted: DataFrame,
+      newRates: DataFrame,
+      seenDelta: DataFrame,
+      frontier: DataFrame,
+      hostStates: Dataset[HostState]) {
+    def unpersist(): Unit = { sched.unpersist(); extracted.unpersist() }
+  }
+
+  /** The crawl round step — per-host politeness schedule → fetch-join →
+    * extract → rates upsert → seen delta → next frontier → host states —
+    * shared by the batch loop ([[run]]) and the streaming seed path
+    * (`Streams.processSeedBatch`). Callers own everything around it: dedup,
+    * the offsite/robots gates producing `allowed`, metrics, the commit.
+    *
+    * @param allowed the gated frontier; callers cache it when it is a
+    *                computed plan, since both the schedule and the next
+    *                frontier read it
+    * @param rates   rates committed before this round (the upsert's
+    *                unique-key history)
+    * @param round   the round number stamped on seen rows and host states
+    */
+  private[graft] def step(
+      allowed: DataFrame,
+      hostStates: Dataset[HostState],
+      rates: DataFrame,
+      round: Int,
+      pages: DataFrame,
+      cfg: PolitenessConfig,
+      roundSec: Double,
+      maxRetries: Int,
+      providers: Seq[graft.provider.Provider]): Round = {
+    val sched = Scheduler.scheduleRound(allowed, hostStates.toDF(), cfg, roundSec).cache()
+    // sched (and every cached frame upstream of it) is materialized by the
+    // single `extracted.count()` action below, BEFORE the caller's writes —
+    // cache blocks fill as the extraction pass scans them, so the
+    // concurrent downstream actions (which would each recompute the whole
+    // dedup→robots→schedule chain on a cold cache — AQE compiles a fresh
+    // physical plan per action; only materialized cache blocks are shared)
+    // all hit warm caches. One action per round for the whole chain, not
+    // two (a separate sched.count() paid an extra pass over the schedule
+    // plan every round).
+
+    // "fetch": equi-join against the page table on url — the offline,
+    // deterministic stand-in for the downloader (SURVEY.md §2#19).
+    // Deliberately NOT cached: page bodies are KBs per row; we stream them
+    // once through extraction and cache only the slim result. SHUFFLE_HASH
+    // hint with the slim schedule as build side: a sort-merge join would
+    // SORT the KB-per-row page partitions — thread dumps showed that
+    // copyMemory-heavy sort dominating the round. Hash-probing streams the
+    // fat side untouched.
+    val fetched = sched.hint("shuffle_hash")
+      .join(pages.select(col("url"), col("text")), Seq("url"), "left")
+
+    // extract per provider in ONE pass over the page text; MC error pages
+    // are dropped (not stored), Visa parse misses store a null rate
+    // (reference parity). The text column is gone after this. `headers` is
+    // OPTIONAL on frontier rows (expandSeeds emits it; direct frontier
+    // builders like the bench workload need not) — when present it must
+    // survive extraction so retry rows re-enter the frontier with their
+    // request headers intact. All provider-specific behavior routes through
+    // the registry (1-based id in client.py:86-88 seeding order), so a new
+    // provider never touches the round (the reference's one extension point).
+    val carryCols =
+      Seq("url", "canonUrl", "urlHash", "host", "card_c", "trans_c", "date",
+        "provider", "priority", "seq", "retries") ++
+        (if (allowed.columns.contains("headers")) Seq("headers") else Nil)
+    val route = graft.provider.Providers.route(col("provider"), providers) _
+    val extracted = fetched.select(
+      carryCols.map(col) ++ Seq(
+        graft.provider.Providers.idCol(col("provider"), providers).as("provider_id"),
+        col("text").isNotNull.as("hit"),
+        (col("text").isNotNull && coalesce(route(_.isError(col("text"))), lit(false))).as("is_err"),
+        route(_.extractRate(col("text"))).as("rate")): _*)
+      .cache()
+    try extracted.count() // one streaming pass fills the (slim) cache
+    catch { case e: Throwable => extracted.unpersist(); sched.unpersist(); throw e }
+
+    // rates upsert honoring the unique constraint (orm.py:33-34):
+    // set-difference (duplicate keys within the round AND vs prior rounds
+    // both excluded)
+    val rateKeys = Seq("card_code", "trans_code", "date", "provider_id")
+    val newRates = extracted
+      .filter(col("hit") && !col("is_err"))
+      .select(col("card_c").as("card_code"), col("trans_c").as("trans_code"),
+        col("date"), col("provider_id"), col("rate"))
+      .dropDuplicates(rateKeys)
+      .join(rates.select(rateKeys.map(col): _*), rateKeys, "left_anti")
+
+    // seen delta = scheduled canonical urls; the round number travels as
+    // DATA in the seen rows (not as a path position), so per-round
+    // provenance survives delta compaction. The next frontier is `allowed`
+    // minus the scheduled rows (rows the gates dropped leave with them);
+    // fetch misses re-enter at priority-1 with retries+1, capped at
+    // maxRetries (Scrapy's retry middleware defaults, SURVEY.md §2#30).
+    val seenDelta = sched.select(col("urlHash"), col("canonUrl").as("url"), lit(round).as("round"))
+    val retryRows = extracted
+      .filter(!col("hit") && col("retries") < maxRetries)
+      .select(carryCols.map {
+        case "priority" => (col("priority") - 1).as("priority")
+        case "retries" => (col("retries") + 1).as("retries")
+        case c => col(c)
+      }: _*)
+    val frontier = allowed
+      .join(sched.select("urlHash", "canonUrl"), Seq("urlHash", "canonUrl"), "left_anti")
+      .unionByName(retryRows)
+    Round(sched, extracted, newRates, seenDelta, frontier,
+      Scheduler.updateHostStates(sched, hostStates, cfg, round, roundSec))
   }
 }

@@ -1,6 +1,6 @@
 package graft.dedup
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.sketch.BloomFilter
@@ -14,14 +14,9 @@ import org.apache.spark.util.sketch.BloomFilter
   * *confirms* — the final URL-seen set must be exact to match the reference
   * (no false drops, ever: Bloom false positives only cost a join probe).
   *
-  * Scale notes (10^10 URLs): the seen table lives hash-partitioned by
-  * `pmod(urlHash, P)` so the anti-join is a co-partitioned shuffle on a
-  * 64-bit key (no wide rows move); the Bloom is built distributedly via
-  * `DataFrameStatFunctions.bloomFilter` (treeAggregate under the hood) and
-  * broadcast once per round. At 10^10 keys a single driver Bloom at 1% fpp
-  * is ~12 GB — too big — so [[filterNewBloom]] takes `expectedItems`/`fpp`
-  * per *partition-group* and is applied per hash-partition range by the
-  * caller when the seen set outgrows a single filter.
+  * Scale notes (10^10 URLs): at 10^10 keys a single driver Bloom at 1%
+  * fpp is ~12 GB — too big — so the filter is split into one Bloom per
+  * hash partition `pmod(urlHash, P)` ([[filterNewPartitionedBloom]]).
   */
 object UrlSeen {
 
@@ -47,28 +42,6 @@ object UrlSeen {
       seen.select(col("urlHash").as("__sh"), col("url").as("__su")),
       candidates("urlHash") === col("__sh") && candidates("canonUrl") === col("__su"),
       "left_anti")
-
-  /** Bloom-pruned dedup: broadcast Bloom over the seen hashes drops the
-    * vast majority of already-seen candidates *before* the shuffle; the
-    * survivors (new URLs + Bloom false positives) go through the exact
-    * anti-join. Returns (newRows, bloomPrunedCount approximation source).
-    */
-  def filterNewBloom(
-      spark: SparkSession,
-      candidates: DataFrame,
-      seen: DataFrame,
-      expectedItems: Long = 1000000L,
-      fpp: Double = 0.01): DataFrame = {
-    if (seen.isEmpty) candidates
-    else {
-      val bloom: BloomFilter = seen.stat.bloomFilter("urlHash", math.max(expectedItems, 1000L), fpp)
-      val bc = spark.sparkContext.broadcast(bloom)
-      val mightContain = udf((h: Long) => bc.value.mightContainLong(h))
-      val (maybeSeen, definitelyNew) =
-        (candidates.filter(mightContain(col("urlHash"))), candidates.filter(!mightContain(col("urlHash"))))
-      definitelyNew.unionAll(filterNewExact(maybeSeen, seen))
-    }
-  }
 
   // ------------------------------------------------- partitioned Bloom
 
@@ -156,7 +129,7 @@ object UrlSeen {
         val prior = if (loadExisting) loadFilter(dir, pm) else None
         val (bf, cap, n0) = prior match {
           case Some(f) =>
-            val (c, n) = readSidecarStatic(dir, pm)
+            val (c, n, _) = readSidecar(dir, pm)
             (f, c, n)
           case None =>
             val c = math.max(capacityOf(pm), 2L)
@@ -190,18 +163,13 @@ object UrlSeen {
   /** One parser for the `"capacity count generation"` sidecar format
     * (generation is 0 for legacy 2-field sidecars; all-zero when missing).
     */
-  private[dedup] def readSidecar(dir: String, pm: Long): (Long, Long, Long) = {
+  private[graft] def readSidecar(dir: String, pm: Long): (Long, Long, Long) = {
     val p = java.nio.file.Paths.get(dir, f"bloom-$pm%05d.cnt")
     if (!java.nio.file.Files.exists(p)) (0L, 0L, 0L)
     else {
       val parts = java.nio.file.Files.readString(p).trim.split(" ")
       (parts(0).toLong, parts(1).toLong, if (parts.length >= 3) parts(2).toLong else 0L)
     }
-  }
-
-  private[graft] def readSidecarStatic(dir: String, pm: Long): (Long, Long) = {
-    val (cap, n, _) = readSidecar(dir, pm)
-    (cap, n)
   }
 
   private[dedup] def loadFilter(dir: String, pm: Long): Option[BloomFilter] = {

@@ -293,26 +293,21 @@ object Frontier {
         .toSeq.sortBy(_.getFileName.toString)
     }
     val resume = store.readCurrent()
+    val man = resume.map(_._2).getOrElse(Map.empty[String, String])
     var version = resume.map(_._1).getOrElse(0)
-    var ratesPaths = resume.flatMap(_._2.get("rates"))
-      .map(_.split(";").toIndexedSeq.filter(_.nonEmpty)).getOrElse(Nil)
-    var done = resume.flatMap(_._2.get("ingestedFiles"))
-      .map(_.split(";").filter(_.nonEmpty).toSet).getOrElse(Set.empty[String])
+    var ratesPaths = graft.checkpoint.SnapshotStore.list(man, "rates")
+    var done = graft.checkpoint.SnapshotStore.list(man, "ingestedFiles").toSet
     files.filterNot(f => done(f.getFileName.toString)).foreach { f =>
       version += 1
       val p = store.dataPath("rates", version)
       ratesFromCsv(spark, f.toString, providerId).write.mode("overwrite").parquet(p)
       ratesPaths = ratesPaths :+ p
       done = done + f.getFileName.toString
-      store.commit(version, Map(
-        "rates" -> ratesPaths.mkString(";"),
-        "ingestedFiles" -> done.toSeq.sorted.mkString(";")))
+      store.update(version, Map(
+        "rates" -> ratesPaths,
+        "ingestedFiles" -> done.toSeq.sorted))
     }
-    if (ratesPaths.isEmpty)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType.fromDDL(
-          "card_code STRING, trans_code STRING, date DATE, provider_id INT, rate DOUBLE"))
-    else spark.read.parquet(ratesPaths: _*)
+    graft.checkpoint.SnapshotStore.read(spark, ratesPaths, graft.crawl.CrawlJob.RatesDdl)
   }
 
   /** Bulk rates ingest (client.py:152-171): header CSV, dates `MM/dd/yyyy`

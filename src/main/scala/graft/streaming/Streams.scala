@@ -152,14 +152,14 @@ object Streams {
   private[graft] def processDocBatch(
       batch: DataFrame, batchId: Long, storeDir: String,
       compactEvery: Int = 64): Unit = {
+    import graft.checkpoint.SnapshotStore
     val spark = batch.sparkSession
-    val store = new graft.checkpoint.SnapshotStore(storeDir)
+    val store = new SnapshotStore(storeDir)
     val resume = store.readCurrent()
-    val doneBatches = resume.flatMap(_._2.get("batches"))
-      .map(_.split(";").filter(_.nonEmpty).map(_.toLong).toSet).getOrElse(Set.empty[Long])
+    val man = resume.map(_._2).getOrElse(Map.empty[String, String])
+    val doneBatches = SnapshotStore.list(man, "batches").map(_.toLong).toSet
     if (doneBatches.contains(batchId)) return // replayed after crash
-    val corpusPaths = resume.flatMap(_._2.get("corpus"))
-      .map(_.split(";").toIndexedSeq.filter(_.nonEmpty)).getOrElse(Nil)
+    val corpusPaths = SnapshotStore.list(man, "corpus")
     // dedup vs HISTORY on the md5 content identity — slim (hash-only) build
     // side; the in-flight window was already deduped by cleanDocs
     val hashed = batch.withColumn("__h", md5(col("text").cast("binary")))
@@ -195,9 +195,9 @@ object Streams {
       }.reduce(_ unionByName _).write.mode("overwrite").parquet(p)
       allPaths = Seq(p)
     }
-    store.commit(version, resume.map(_._2).getOrElse(Map.empty) ++ Map(
-      "corpus" -> allPaths.mkString(";"),
-      "batches" -> (doneBatches + batchId).toSeq.sorted.mkString(";")))
+    store.update(version, Map(
+      "corpus" -> allPaths,
+      "batches" -> (doneBatches + batchId).toSeq.sorted.map(_.toString)))
   }
 
   /** Watermarked tumbling-window fetch metrics: events(ts, host, fetched,
@@ -276,11 +276,12 @@ object Streams {
 
   /** One micro-batch = one crawl round: (backlog ∪ expanded seeds) → dedup
     * (within batch + vs the store's seen set; retries bypass, as in the
-    * batch loop) → robots gate → per-host politeness schedule →
-    * fetch-join → extract → set-difference rates append → ONE atomic
-    * manifest commit carrying the batch id, the new backlog (deferred +
-    * retry rows) and the AIMD host states. Idempotent per batch id (the
-    * exactly-once half the stream checkpoint can't give).
+    * batch loop) → robots gate → the batch loop's round step
+    * ([[graft.crawl.CrawlJob.step]]: schedule → fetch-join → extract →
+    * rates upsert) → ONE atomic manifest commit carrying the batch id, the
+    * new backlog (deferred + retry rows) and the AIMD host states.
+    * Idempotent per batch id (the exactly-once half the stream checkpoint
+    * can't give).
     */
   private[graft] def processSeedBatch(
       batch: DataFrame,
@@ -294,29 +295,17 @@ object Streams {
         maxGlobal = Int.MaxValue, maxPerHost = Int.MaxValue),
       roundSec: Double = 1e9,
       maxRetries: Int = 2): Unit = {
+    import graft.checkpoint.SnapshotStore
     import graft.crawl.CrawlJob
     import graft.dedup.UrlSeen
-    import graft.politeness.{Robots, Scheduler}
     val spark = batch.sparkSession
-    val store = new graft.checkpoint.SnapshotStore(storeDir)
+    val store = new SnapshotStore(storeDir)
     val resume = store.readCurrent()
-    def paths(key: String): Seq[String] = resume.flatMap(_._2.get(key))
-      .map(_.split(";").toIndexedSeq.filter(_.nonEmpty)).getOrElse(Nil)
-    val doneBatches = resume.flatMap(_._2.get("batches"))
-      .map(_.split(";").filter(_.nonEmpty).map(_.toLong).toSet).getOrElse(Set.empty[Long])
+    val man = resume.map(_._2).getOrElse(Map.empty[String, String])
+    val doneBatches = SnapshotStore.list(man, "batches").map(_.toLong).toSet
     if (doneBatches.contains(batchId)) return // replayed after crash — already committed
-    var seenPaths = paths("seen")
-    var ratesPaths = paths("rates")
-    def emptyDf(ddl: String): DataFrame = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.StructType.fromDDL(ddl))
-    val seenDf =
-      if (seenPaths.isEmpty) emptyDf("urlHash BIGINT, url STRING, round INT")
-      else spark.read.parquet(seenPaths: _*)
-    val ratesDf =
-      if (ratesPaths.isEmpty)
-        emptyDf("card_code STRING, trans_code STRING, date DATE, provider_id INT, rate DOUBLE")
-      else spark.read.parquet(ratesPaths: _*)
+    val seenPaths = SnapshotStore.list(man, "seen")
+    val ratesPaths = SnapshotStore.list(man, "rates")
 
     // seq is a scheduling-order key; a stream batch has no file order, so
     // key deterministically on the seed itself (set semantics are what the
@@ -327,95 +316,50 @@ object Streams {
     // deferred/retry rows from prior batches re-enter ahead of new seeds;
     // a re-arriving seed whose URL is already in the backlog must not
     // shadow the backlog row (which may carry retry state)
-    val backlog = resume.flatMap(_._2.get("backlog")).filter(_.nonEmpty)
+    val backlog = man.get("backlog").filter(_.nonEmpty)
       .map(spark.read.parquet(_)).getOrElse(newFrontier.limit(0))
     val incoming = backlog.unionByName(
       newFrontier.join(backlog.select("canonUrl"), Seq("canonUrl"), "left_anti"))
     // retries bypass the dupefilter (they ARE in seen), as in the batch loop
     val firstTry = incoming.filter(col("retries") === 0)
     val retries = incoming.filter(col("retries") > 0)
-    val fresh = UrlSeen.filterNewExact(firstTry, seenDf).unionByName(retries)
-    // robots gate + politeness schedule — the batch round's gates, inside
-    // the micro-batch. `allowed` is cached because the commit runs TWO
-    // actions rooted at it (the schedule consumes it AND the backlog's
-    // deferred anti-join re-reads it) — uncached, each action would re-run
-    // the whole expand → dedup-window → seen-anti-join → robots chain.
-    // `None` means no rules (callers decide emptiness once, not per batch).
-    val allowed = robots.map(Robots.allowed(fresh, _)).getOrElse(fresh).cache()
+    val fresh = UrlSeen.filterNewExact(firstTry, SnapshotStore.read(spark, seenPaths, CrawlJob.SeenDdl))
+      .unionByName(retries)
+    // robots gate, inside the micro-batch. `allowed` is cached because the
+    // round reads it twice (the schedule AND the backlog's deferred
+    // anti-join) — uncached, each read would re-run the whole expand →
+    // dedup-window → seen-anti-join → robots chain. `None` means no rules
+    // (callers decide emptiness once, not per batch).
+    val allowed = robots.map(graft.politeness.Robots.allowed(fresh, _)).getOrElse(fresh).cache()
     import spark.implicits._
-    val hostStates = resume.flatMap(_._2.get("hostStates")).filter(_.nonEmpty)
+    val hostStates = man.get("hostStates").filter(_.nonEmpty)
       .map(p => spark.read.parquet(p).as[graft.model.HostState])
       .getOrElse(spark.emptyDataset[graft.model.HostState])
-    val sched = Scheduler.scheduleRound(allowed, hostStates.toDF(), cfg, roundSec).cache()
-    try { // count() inside: a throw during materialization must still unpersist
-      sched.count() // one pass computes the chain, filling BOTH caches
-      val fetched = sched.hint("shuffle_hash")
-        .join(pages.select(col("url"), col("text")), Seq("url"), "left")
-      val extracted = fetched.select(
-        col("url"), col("canonUrl"), col("urlHash"), col("host"), col("card_c"),
-        col("trans_c"), col("date"), col("provider"), col("priority"), col("seq"),
-        col("retries"), col("headers"),
-        graft.provider.Providers.idCol(col("provider"), providers).as("provider_id"),
-        col("text").isNotNull.as("hit"),
-        (col("text").isNotNull && coalesce(
-          graft.provider.Providers.route(col("provider"), providers)(_.isError(col("text"))),
-          lit(false))).as("is_err"),
-        graft.provider.Providers.route(col("provider"), providers)(_.extractRate(col("text")))
-          .as("rate"))
-        .cache()
-      extracted.count() // one streaming pass over the page text fills the slim cache
+    try {
+      val r = CrawlJob.step(allowed, hostStates,
+        SnapshotStore.read(spark, ratesPaths, CrawlJob.RatesDdl), batchId.toInt + 1,
+        pages, cfg, roundSec, maxRetries, providers)
       try {
-        val parsed = extracted.filter(col("hit") && !col("is_err"))
-          .select(col("card_c").as("card_code"), col("trans_c").as("trans_code"),
-            col("date"), col("provider_id"), col("rate"))
-          .dropDuplicates("card_code", "trans_code", "date", "provider_id")
-        val newRates = parsed.join(
-          ratesDf.select("card_code", "trans_code", "date", "provider_id"),
-          Seq("card_code", "trans_code", "date", "provider_id"), "left_anti")
-        val seenDelta = sched.select(
-          col("urlHash"), col("canonUrl").as("url"), lit(batchId.toInt + 1).as("round"))
-        // next backlog = politeness-deferred rows + fetch-miss retries
-        // (priority-1, retries+1, dropped past maxRetries) — the streaming
-        // analogue of the frontier surviving a batch round
-        val frontierCols = incoming.columns.toIndexedSeq.map(col)
-        val deferred = allowed.join(
-          sched.select("urlHash", "canonUrl"), Seq("urlHash", "canonUrl"), "left_anti")
-          .select(frontierCols: _*)
-        val retryRows = extracted
-          .filter(!col("hit") && col("retries") < maxRetries)
-          .select(incoming.columns.toIndexedSeq.map {
-            case "priority" => (col("priority") - 1).as("priority")
-            case "retries" => (col("retries") + 1).as("retries")
-            case c => col(c)
-          }: _*)
-        val backlog1 = deferred.unionByName(retryRows)
-        val hostStates1 = Scheduler.updateHostStates(
-          sched, hostStates, cfg, batchId.toInt + 1, roundSec)
-
         val version = resume.map(_._1).getOrElse(0) + 1
-        val seenPath = store.dataPath("seen", version)
-        val ratesPath = store.dataPath("rates", version)
-        val backlogPath = store.dataPath("backlog", version)
-        val hostStatesPath = store.dataPath("hostStates", version)
-        seenDelta.write.mode("overwrite").parquet(seenPath)
-        newRates.write.mode("overwrite").parquet(ratesPath)
-        backlog1.write.mode("overwrite").parquet(backlogPath)
-        hostStates1.toDF().write.mode("overwrite").parquet(hostStatesPath)
-        seenPaths = seenPaths :+ seenPath
-        ratesPaths = ratesPaths :+ ratesPath
-        // foreign tables (e.g. a persisted IVF model) carry forward — see
-        // the CrawlJob commit note
-        store.commit(version, resume.map(_._2).getOrElse(Map.empty) ++ Map(
-          "seen" -> seenPaths.mkString(";"),
-          "rates" -> ratesPaths.mkString(";"),
-          "backlog" -> backlogPath,
-          "hostStates" -> hostStatesPath,
-          "batches" -> (doneBatches + batchId).toSeq.sorted.mkString(";")))
-      } finally extracted.unpersist()
-    } finally {
-      sched.unpersist()
-      allowed.unpersist()
-    }
+        def write(name: String, df: DataFrame): String = {
+          val p = store.dataPath(name, version)
+          df.write.mode("overwrite").parquet(p)
+          p
+        }
+        val seenPath = write("seen", r.seenDelta)
+        val ratesPath = write("rates", r.newRates)
+        // next backlog = the round's next frontier: politeness-deferred
+        // rows + fetch-miss retries
+        val backlogPath = write("backlog", r.frontier)
+        val hostStatesPath = write("hostStates", r.hostStates.toDF())
+        store.update(version, Map(
+          "seen" -> (seenPaths :+ seenPath),
+          "rates" -> (ratesPaths :+ ratesPath),
+          "backlog" -> Seq(backlogPath),
+          "hostStates" -> Seq(hostStatesPath),
+          "batches" -> (doneBatches + batchId).toSeq.sorted.map(_.toString)))
+      } finally r.unpersist()
+    } finally allowed.unpersist()
   }
 
   // ------------------------------------------------ stateful host sessions

@@ -12,10 +12,6 @@ object UrlCols {
 
   val canonicalUdf = udf((u: String) => Urls.canonicalize(u))
 
-  val hostOfUdf = udf((u: String) => Urls.hostOf(u))
-
-  val scrapyFingerprintUdf = udf((u: String) => Urls.scrapyFingerprint(u))
-
   val scrapyFingerprintOfCanonicalUdf =
     udf((c: String) => Urls.scrapyFingerprintOfCanonical(c))
 

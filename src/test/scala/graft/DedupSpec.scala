@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.dedup.UrlSeen
@@ -28,13 +29,20 @@ class DedupSpec extends SparkSpec {
       .select(col("url"), col("seq"), canon(col("url")).as("canonUrl"))
       .withColumn("urlHash", xxhash64(col("canonUrl")))
 
+  /** partitioned-Bloom dedup of `candidates` against `seen`, filters built fresh */
+  private def bloomDedup(candidates: DataFrame, seen: DataFrame): DataFrame = {
+    val dir = java.nio.file.Files.createTempDirectory("bloom").toString
+    UrlSeen.buildPartitionedBlooms(seen, dir, parts = 4, expectedItemsPerPart = 1000)
+    UrlSeen.filterNewPartitionedBloom(candidates, seen, dir, parts = 4)
+  }
+
   test("bloom-pruned dedup returns exactly the exact-anti-join result") {
     val seen = (1 to 2000).map(i => s"http://seen.com/p$i")
       .toDF("url").select(xxhash64(canon(col("url"))).as("urlHash"), canon(col("url")).as("url"))
     val candidates = candidatesOf((1500 to 2500).map(i => s"http://seen.com/p$i") ++
       (1 to 100).map(i => s"http://new.com/q$i"))
     val exact = UrlSeen.filterNewExact(candidates, seen).select("url").as[String].collect().toSet
-    val bloom = UrlSeen.filterNewBloom(spark, candidates, seen, expectedItems = 2000)
+    val bloom = bloomDedup(candidates, seen)
       .select("url").as[String].collect().toSet
     assert(bloom === exact)
     assert(exact.size === (2500 - 2000) + 100)
@@ -124,7 +132,7 @@ class DedupSpec extends SparkSpec {
         seenOf(deltaUrls), seenOf(seenUrls), dir, parts, capacityPerPart = 16)
     }
     // sidecar capacities must have grown past the initial deltas
-    val caps = (0L until parts).map(pm => UrlSeen.readSidecarStatic(dir, pm))
+    val caps = (0L until parts).map { pm => val (cap, n, _) = UrlSeen.readSidecar(dir, pm); (cap, n) }
     assert(caps.forall { case (cap, n) => n >= cap / 4 && cap >= n },
       s"capacity must bound count after rebuilds: $caps")
     assert(caps.map(_._2).sum === 1600L)
@@ -170,7 +178,7 @@ class DedupSpec extends SparkSpec {
       "http://a.com/other"))
     val exact = UrlSeen.filterNewExact(candidates, seen).select("url").as[String].collect().toSet
     assert(exact === Set("http://a.com/other"))
-    val bloom = UrlSeen.filterNewBloom(spark, candidates, seen, expectedItems = 10)
+    val bloom = bloomDedup(candidates, seen)
       .select("url").as[String].collect().toSet
     assert(bloom === exact)
   }
