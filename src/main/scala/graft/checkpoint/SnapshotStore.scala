@@ -157,10 +157,12 @@ object SnapshotStore {
     xs.mkString(Sep)
   }
 
-  /** The parquet tables at `paths` as one frame, or an empty frame of
-    * schema `ddl` when there are none (a table nothing has committed yet).
+  /** The parquet tables at `paths` as one frame of schema `ddl` (empty when
+    * there are none: a table nothing has committed yet). Reading with the
+    * known schema submits no schema-inference job; columns the files lack
+    * read as null.
     */
   def read(spark: SparkSession, paths: Seq[String], ddl: String): DataFrame =
-    if (paths.nonEmpty) spark.read.parquet(paths: _*)
+    if (paths.nonEmpty) spark.read.schema(ddl).parquet(paths: _*)
     else spark.createDataFrame(spark.sparkContext.emptyRDD[Row], StructType.fromDDL(ddl))
 }

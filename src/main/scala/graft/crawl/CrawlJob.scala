@@ -91,7 +91,6 @@ object CrawlJob {
       maxRetries: Int = 2,
       allowedDomains: Seq[String] = Nil,
       bloomParts: Int = 32,
-      bloomCapacityPerPart: Long = 1L << 18,
       compactEvery: Int = 64,
       insertBatchRows: Option[Int] = None,
       providers: Seq[graft.provider.Provider] = graft.provider.Providers.registry): (DataFrame, DataFrame, DataFrame) = {
@@ -122,6 +121,17 @@ object CrawlJob {
     def ratesDf: DataFrame = SnapshotStore.read(spark, ratesPaths, RatesDdl)
     def metricsDf: DataFrame = SnapshotStore.read(spark, metricsPaths, MetricsDdl)
 
+    // a fresh run's frontier is a COMPUTED plan (the within-batch dedup
+    // window): cache it so the loop-guard count and round 1's consumption
+    // evaluate it once. Resume frontiers are parquet-backed — nothing to
+    // save. Released at the end of round 1 with the other round caches.
+    if (resume.isEmpty) frontier = frontier.cache()
+    var frontierCount = frontier.count()
+    // the run never adds URLs — the frontier only shrinks, and retries are
+    // keys already merged — so this frontier bounds the keys the rounds
+    // below merge into the filters: size fresh filters from it
+    val bloomCapacity = UrlSeen.capacityFor(frontierCount, bloomParts)
+
     // reconcile the partitioned-Bloom sidecar state with the committed
     // snapshot: the filters are merged BEFORE each manifest commit, so
     // marker ≥ committed round ⇒ filters ⊇ seen (extra keys are harmless —
@@ -133,12 +143,13 @@ object CrawlJob {
         // rebuild from DISTINCT keys: retry rows re-append the same urlHash
         // each round, so raw row counts would inflate the saturation sidecars
         // and trigger premature doubled-capacity rebuilds (the merge path
-        // already dedups via distinct() — keep both paths consistent)
+        // already dedups via distinct() — keep both paths consistent).
+        // Sized for the seen keys plus the frontier still to merge.
         val distinctKeys = seenDf.select("urlHash").distinct()
         val seenCount = distinctKeys.count()
         UrlSeen.buildPartitionedBlooms(
           distinctKeys, bloomDir, bloomParts,
-          math.max(bloomCapacityPerPart, 2L * seenCount / bloomParts))
+          UrlSeen.capacityFor(seenCount + frontierCount, bloomParts))
       }
       UrlSeen.writeBloomRound(bloomDir, round)
     }
@@ -147,12 +158,6 @@ object CrawlJob {
     // no robots rules at all (common in tests/bench) ⇒ skip the gate's
     // broadcast-join subtree every round; checked once, not per round
     val robotsEmpty = robots.isEmpty
-    // a fresh run's frontier is a COMPUTED plan (the within-batch dedup
-    // window): cache it so the loop-guard count and round 1's consumption
-    // evaluate it once. Resume frontiers are parquet-backed — nothing to
-    // save. Released at the end of round 1 with the other round caches.
-    if (resume.isEmpty) frontier = frontier.cache()
-    var frontierCount = frontier.count()
     while (frontierCount > 0 && round < maxRounds) {
       round += 1
       val frontierPrev = frontier
@@ -160,9 +165,9 @@ object CrawlJob {
       val tRound = System.nanoTime()
       // 1. dedup against the seen set — INCREMENTAL partitioned-Bloom prune
       //    + exact anti-join confirm. The per-partition filters were merged
-      //    with each prior round's seen DELTA (O(delta)/round, never a full
-      //    seen rescan; no driver-sized filter), so per-round dedup cost is
-      //    flat as the crawl grows — the 10^10-URL shape. Nothing seen yet
+      //    with each prior round's seen DELTA (never a full seen rescan; no
+      //    driver-sized filter), so per-round dedup cost is flat as the
+      //    crawl grows — the 10^10-URL shape. Nothing seen yet
       //    (first round) ⇒ skip the whole dedup subtree.
       //    Retry rows (retries > 0) BYPASS the dupefilter — Scrapy re-enqueues
       //    retries with dont_filter semantics, and they are in `seen` already.
@@ -203,10 +208,12 @@ object CrawlJob {
       // 8. per-round fetch/dedup metrics (north_rule). All aggregations run
       //    over slim cached frames.
       // ALL per-host stage counts in ONE aggregation: tag each (cached,
-      // slim) stage frame with its name, union, pivot on the fixed stage
-      // list — one shuffle of (host, stage) rows instead of 8 groupBys +
-      // 7 full_outer joins (whose per-job fixed costs dominated small
-      // rounds and whose 8 exchanges were pure waste at scale).
+      // slim) stage frame with its name, union, and count each stage of the
+      // fixed list with a conditional count — one shuffle of (host, stage)
+      // rows instead of 8 groupBys + 7 full_outer joins (whose per-job
+      // fixed costs dominated small rounds and whose 8 exchanges were pure
+      // waste at scale). `pivot` would plan two aggregates and two
+      // exchanges for the same counts.
       // Two scan collapses (r07):
       //  - a pass-through gate (first round's dedup, no allowed_domains,
       //    empty robots) returns its INPUT FRAME unchanged; consecutive
@@ -216,8 +223,9 @@ object CrawlJob {
       //  - the three fetch outcomes are mutually exclusive and exhaustive
       //    (!hit / hit∧is_err / hit∧¬is_err), so one labeled scan of
       //    `extracted` replaces three filtered ones.
-      val stages = Seq("entered", "postDedup", "postOffsite", "postRobots",
+      val stageCounts = Seq("entered", "postDedup", "postOffsite", "postRobots",
         "scheduled", "fetchMissed", "errorDropped", "extractedOk")
+        .map(s => count(when(col("__stage") === s, 1)).as(s))
       def tag(df: DataFrame, stage: String): DataFrame =
         df.select(col("host"), lit(stage).as("__stage"))
       val gateTagged = {
@@ -242,16 +250,13 @@ object CrawlJob {
       val metricsDelta = gateTagged
         .unionAll(tag(sched, "scheduled"))
         .unionAll(extractedTagged)
-        .groupBy("host").pivot("__stage", stages).count()
+        .groupBy("host").agg(stageCounts.head, stageCounts.tail: _*)
         .select(
-          lit(round).as("round"), col("host"),
-          coalesce(col("scheduled"), lit(0L)).as("scheduled"),
-          (coalesce(col("entered"), lit(0L)) - coalesce(col("postDedup"), lit(0L))).as("dedupDropped"),
-          (coalesce(col("postDedup"), lit(0L)) - coalesce(col("postOffsite"), lit(0L))).as("offsiteDropped"),
-          (coalesce(col("postOffsite"), lit(0L)) - coalesce(col("postRobots"), lit(0L))).as("robotsDropped"),
-          coalesce(col("fetchMissed"), lit(0L)).as("fetchMissed"),
-          coalesce(col("errorDropped"), lit(0L)).as("errorDropped"),
-          coalesce(col("extractedOk"), lit(0L)).as("extractedOk"))
+          lit(round).as("round"), col("host"), col("scheduled"),
+          (col("entered") - col("postDedup")).as("dedupDropped"),
+          (col("postDedup") - col("postOffsite")).as("offsiteDropped"),
+          (col("postOffsite") - col("postRobots")).as("robotsDropped"),
+          col("fetchMissed"), col("errorDropped"), col("extractedOk"))
 
       // 9. atomic snapshot commit — write data files, then swap manifest.
       //    Append-only tables write only this round's delta; the manifest
@@ -286,7 +291,7 @@ object CrawlJob {
       // (it reads only the cached slim schedule) and, like the data writes,
       // completes BEFORE the manifest commit — the superset invariant (see
       // the reconcile note above). Merge only this round's FIRST-TRY
-      // scheduled keys: O(delta), flat per round; retry rows are skipped
+      // scheduled keys; retry rows are skipped
       // (their hash entered the filter in the round that first scheduled
       // them, and re-adding would inflate the saturation counters). The
       // rebuild source (old seen ∪ this delta) is touched only if a
@@ -297,7 +302,7 @@ object CrawlJob {
         UrlSeen.mergeDeltaIntoPartitionedBlooms(
           firstTryKeys,
           seenDf.select("urlHash").unionByName(firstTryKeys),
-          bloomDir, bloomParts, bloomCapacityPerPart)
+          bloomDir, bloomParts, bloomCapacity)
         UrlSeen.writeBloomRound(bloomDir, round)
         "blooms"
       }
@@ -330,17 +335,19 @@ object CrawlJob {
       // round just to decide loop termination.
       val lineageSchema = org.apache.spark.sql.types.StructType.fromDDL(
         "round INT, table STRING, file STRING, rows BIGINT")
+      // newHadoopConf copies the whole Configuration: once per round
+      val hadoopConf = spark.sessionState.newHadoopConf()
       val lineageRows: Array[org.apache.spark.sql.Row] = Seq(
         ("frontier", frontierPath), ("seen", seenPath), ("rates", ratesPath))
         .flatMap { case (name, p) =>
           val dir = new org.apache.hadoop.fs.Path(p)
-          val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
+          val fs = dir.getFileSystem(hadoopConf)
           fs.listStatus(dir).toIndexedSeq
             .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
             .map { st =>
               val n = org.apache.parquet.hadoop.ParquetFileReader.open(
                 org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(
-                  st, spark.sessionState.newHadoopConf())) match {
+                  st, hadoopConf)) match {
                 case r => try r.getRecordCount finally r.close()
               }
               (st.getPath.toString, n)
@@ -388,9 +395,11 @@ object CrawlJob {
         "lineage" -> lineagePaths))
 
       // reload from the committed snapshot: truncates lineage so plans don't
-      // grow unboundedly across rounds (the iterative-algorithm idiom)
-      frontier = spark.read.parquet(frontierPath)
-      hostStates = spark.read.parquet(hostStatesPath).as[HostState]
+      // grow unboundedly across rounds (the iterative-algorithm idiom). The
+      // schema of the frame just written is known: passing it spares a
+      // schema-inference job per table per round
+      frontier = spark.read.schema(r.frontier.schema).parquet(frontierPath)
+      hostStates = spark.read.schema(r.hostStates.schema).parquet(hostStatesPath).as[HostState]
       r.unpersist()
       allowedF.unpersist()
       onsiteF.unpersist()

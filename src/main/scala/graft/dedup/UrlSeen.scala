@@ -78,22 +78,41 @@ object UrlSeen {
       seen.select(col("urlHash"), pmod(col("urlHash"), lit(parts.toLong)).as("pm")),
       dir, _ => expectedItemsPerPart, fpp, loadExisting = false): Unit
 
+  /** Per-partition capacity for at most `keys` keys over `parts`
+    * partitions: twice the even share (headroom for hash skew), never
+    * below 1024 keys (~1.2 KB: negligible next to a round's parquet files,
+    * and a tinier filter is easily saturated by skew). A filter sized to
+    * the set it guards keeps its bytes — read, deserialized and rewritten
+    * whole by every merge — proportional to the crawl; a partition that
+    * outgrows it is rebuilt at doubled capacity by
+    * [[mergeDeltaIntoPartitionedBlooms]].
+    */
+  def capacityFor(keys: Long, parts: Int): Long =
+    math.max(1024L, 2L * keys / parts)
+
   /** One round's INCREMENTAL maintenance: merge only `delta`'s keys into the
-    * per-partition filters (O(delta) work — never a full-seen rescan), in a
-    * SINGLE distributed pass: each task merges its partition's keys and
-    * reports (capacity, count). Writing a transiently over-capacity filter
-    * is safe (still a superset — only fpp degrades until the repair), so
-    * saturated partitions are detected from the returned counts and rebuilt
-    * afterwards from `seenWithDelta` (the full seen set *including* this
-    * delta, deduped by key) at doubled capacity — O(seen/parts) for those
-    * partitions only, amortized by the doubling.
+    * per-partition filters (never a full-seen rescan), in a SINGLE
+    * distributed pass: each task merges its partition's keys and reports
+    * (capacity, count). Each touched partition's filter is read and
+    * rewritten whole, so a round costs O(delta) hashing plus O(filter
+    * bytes) of I/O per touched partition — which is why callers size
+    * filters with [[capacityFor]] rather than a crawl-independent constant.
+    * Writing a transiently over-capacity filter is safe (still a superset —
+    * only fpp degrades until the repair), so saturated partitions are
+    * detected from the returned counts and rebuilt afterwards from
+    * `seenWithDelta` (the full seen set *including* this delta, deduped by
+    * key) at doubled capacity — O(seen/parts) for those partitions only,
+    * amortized by the doubling.
+    *
+    * @param capacityPerPart capacity of a partition's filter when it has
+    *                        none yet; an existing filter keeps its own
     */
   def mergeDeltaIntoPartitionedBlooms(
       delta: DataFrame,
       seenWithDelta: => DataFrame,
       dir: String,
       parts: Int,
-      capacityPerPart: Long = 1L << 18,
+      capacityPerPart: Long,
       fpp: Double = 0.01): Unit = {
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
     val withPm = delta.select(col("urlHash"), pmod(col("urlHash"), lit(parts.toLong)).as("pm"))
@@ -153,7 +172,10 @@ object UrlSeen {
     val d = java.nio.file.Paths.get(dir)
     java.nio.file.Files.createDirectories(d) // idempotent; tasks may race
     val tmp = java.nio.file.Files.createTempFile(d, name, ".tmp")
-    val out = java.nio.file.Files.newOutputStream(tmp)
+    // buffered: BloomFilter.writeTo issues one 8-byte writeLong per word,
+    // which unbuffered is one write syscall per word. close() flushes
+    // before the move publishes the file.
+    val out = new java.io.BufferedOutputStream(java.nio.file.Files.newOutputStream(tmp), 1 << 16)
     try body(out) finally out.close()
     java.nio.file.Files.move(tmp, d.resolve(name),
       java.nio.file.StandardCopyOption.ATOMIC_MOVE,

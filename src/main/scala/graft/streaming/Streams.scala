@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
@@ -315,9 +315,11 @@ object Streams {
     val newFrontier = UrlSeen.dedupWithinBatch(CrawlJob.expandSeeds(withSeq, provider, providers))
     // deferred/retry rows from prior batches re-enter ahead of new seeds;
     // a re-arriving seed whose URL is already in the backlog must not
-    // shadow the backlog row (which may carry retry state)
+    // shadow the backlog row (which may carry retry state). Prior batches
+    // wrote it with this batch's frontier schema; reading with that schema
+    // (and host states with theirs) spares a schema-inference job each
     val backlog = man.get("backlog").filter(_.nonEmpty)
-      .map(spark.read.parquet(_)).getOrElse(newFrontier.limit(0))
+      .map(spark.read.schema(newFrontier.schema).parquet(_)).getOrElse(newFrontier.limit(0))
     val incoming = backlog.unionByName(
       newFrontier.join(backlog.select("canonUrl"), Seq("canonUrl"), "left_anti"))
     // retries bypass the dupefilter (they ARE in seen), as in the batch loop
@@ -333,7 +335,8 @@ object Streams {
     val allowed = robots.map(graft.politeness.Robots.allowed(fresh, _)).getOrElse(fresh).cache()
     import spark.implicits._
     val hostStates = man.get("hostStates").filter(_.nonEmpty)
-      .map(p => spark.read.parquet(p).as[graft.model.HostState])
+      .map(spark.read.schema(Encoders.product[graft.model.HostState].schema).parquet(_)
+        .as[graft.model.HostState])
       .getOrElse(spark.emptyDataset[graft.model.HostState])
     try {
       val r = CrawlJob.step(allowed, hostStates,

@@ -143,6 +143,75 @@ class CheckpointSpec extends SparkSpec {
     assert(seenB.count() === seenB.select("urlHash").distinct().count())
   }
 
+  test("a fresh crawl's bloom filters are sized to its frontier, not to a fixed capacity") {
+    // 30 (card, trans) pairs × 10 days = 300 URLs; every round rewrites each
+    // touched filter whole, so filter bytes are per-round checkpoint I/O
+    val currs = Frontier.currencyDim(spark, Seq("GBP", "USD", "EUR", "JPY", "CHF", "AUD"))
+    val seeds = Frontier.candidates(currs, java.time.LocalDate.of(1995, 9, 10), 10)
+    val frontier = CrawlJob.expandSeeds(seeds, "Mastercard")
+    val robots = smallCrawlInputs()._3
+    val dir = Files.createTempDirectory("crawlSized").toString
+    // 150 per round: two rounds, so the second merges into loaded filters
+    val (_, seen, _) = CrawlJob.run(spark, frontier, Synth.mcPages(seeds), robots, dir,
+      PolitenessConfig(maxGlobal = Int.MaxValue, maxPerHost = 150), roundSec = 1e9)
+    val n = frontier.count()
+    assert(n === 300L && seen.count() === n)
+    val bloomBytes = new java.io.File(s"$dir/blooms").listFiles().map(_.length).sum
+    // a 1%-fpp filter needs ~1.2 B per key of capacity: a few bytes per
+    // frontier URL plus a per-partition floor (a crawl-independent 2^18-key
+    // capacity would be 32 × ~314 KB)
+    assert(bloomBytes <= 16L * n + (64L << 10), s"blooms/ holds $bloomBytes B for $n URLs")
+  }
+
+  test("SnapshotStore.read over committed paths submits no Spark job and reads what inference reads") {
+    // committed by a crawl (two rounds of seen and rates deltas) and by the
+    // per-file rates CSV ingest
+    val (frontier, pages, robots) = smallCrawlInputs()
+    val dir = Files.createTempDirectory("crawlRead").toString
+    CrawlJob.run(spark, frontier, pages, robots, dir, cfg, roundSec = 1.25, maxRounds = 2)
+    val man = new SnapshotStore(dir).readCurrent().get._2
+    val csvDir = Files.createTempDirectory("readCsv").toString
+    Files.writeString(java.nio.file.Paths.get(csvDir, "a.csv"),
+      "card_code,trans_code,date,rate\nGBP,USD,09/07/1995,1.5\nUSD,GBP,09/08/1995,\n")
+    val csvStore = new SnapshotStore(Files.createTempDirectory("readCsvCkpt").toString)
+    Frontier.ratesFromCsvPerFile(spark, csvDir, 1, csvStore)
+    val tables = Seq(
+      SnapshotStore.list(man, "seen") -> CrawlJob.SeenDdl,
+      SnapshotStore.list(man, "rates") -> CrawlJob.RatesDdl,
+      SnapshotStore.list(csvStore.readCurrent().get._2, "rates") -> CrawlJob.RatesDdl)
+    assert(tables.map(_._1.size) === Seq(2, 2, 1))
+
+    // job starts by job group; the listener bus delivers in order, so once
+    // the sentinel group's job is seen every earlier job has been counted
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        groups.add(String.valueOf(js.properties.getProperty("spark.jobGroup.id")))
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    val read = try {
+      sc.setJobGroup("snapshot-read", "SnapshotStore.read")
+      val dfs = tables.map { case (ps, ddl) => SnapshotStore.read(spark, ps, ddl) }
+      sc.setJobGroup("snapshot-read-sentinel", "sentinel")
+      spark.range(1).count()
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!groups.contains("snapshot-read-sentinel") && System.nanoTime() < deadline)
+        Thread.sleep(10)
+      assert(groups.contains("snapshot-read-sentinel"))
+      dfs
+    } finally { sc.clearJobGroup(); sc.removeSparkListener(listener) }
+    assert(groups.toArray.count(_ == "snapshot-read") === 0,
+      "SnapshotStore.read submitted a schema-inference job")
+
+    tables.zip(read).foreach { case ((ps, _), df) =>
+      val inferred = spark.read.parquet(ps: _*)
+      assert(df.schema === inferred.schema)
+      assert(df.collect().map(_.toString).sorted.toSeq ===
+        inferred.collect().map(_.toString).sorted.toSeq)
+    }
+  }
+
   test("delta compaction: state identical, manifest bounded, resume across boundary") {
     val (frontier, pages, robots) = smallCrawlInputs()
     // A: never compacts; B: compacts every 2 rounds AND is interrupted right
